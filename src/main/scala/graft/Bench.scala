@@ -1,9 +1,9 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_ISOLATED=1: artifact mode — a FRESH SparkSession
     // (full SparkContext restart) per query, so no block-manager /
     // shuffle-file / JIT residue from one query is ever charged to the
@@ -18,12 +18,7 @@ object Bench {
     Preflight.check(sfDir) // testdata-drift probe: named diagnostics first
 
     def newSession(): SparkSession = {
-      val s = SparkSession.builder().withExtensions(new GraftExtensions)
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Sessions.local(Sessions.cpus)
       // Warm up scheduler + codegen paths so the first timed query doesn't
       // absorb session startup (~3-4 s). Touches no benchmark data.
       s.range(100000).selectExpr("sum(id)").collect()
@@ -87,7 +82,7 @@ object Bench {
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(_) => -1.0 }
       }
       val best = if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0
       if (sys.env.contains("SPARK_GRAFT_REP_TRACE"))
@@ -136,7 +131,7 @@ object Bench {
       java.nio.file.Files.write(out,
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] artifact mirrored to $out")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] artifact mirror failed (non-fatal): $e")
     }
     spark.stop()
@@ -151,7 +146,7 @@ object Bench {
   private def load1(): Double =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Return the JVM to steady state before each timed run (round-3
     * verdict: the full-run artifact read as a 2.8× regression that

@@ -89,8 +89,8 @@ object TextFunctions {
       .otherwise(punctCount(c).cast("double") / length(c).cast("double"))
 
   /** The C4 keep-rule thresholds — the SINGLE source for every quality
-    * gate (batch [[qualityKeep]]/q16, composed q76, streaming
-    * `Streams.qualityGate`); tune here, not at call sites. */
+    * gate ([[qualityKeep]]/q16, composed q76); tune here, not at call
+    * sites. */
   val MinKeepTokens: Int = 5
   val MaxPunctRatio: Double = 0.2
 

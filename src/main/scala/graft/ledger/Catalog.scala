@@ -1132,7 +1132,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     // atomic manifest flip — a replayed id is skipped instead of
     // double-counted. Ids are per-checkpoint monotonic; a FRESH
     // checkpoint replays the whole source, so it must maintain a fresh
-    // table (documented at the stream wrapper).
+    // table.
     batchId.foreach { id =>
       if (appliedBatchId(table).exists(_ >= id)) return
     }
@@ -1396,8 +1396,7 @@ final class Catalog(val spark: SparkSession, val root: String,
                   clusterBy: Seq[String] = Seq.empty): Long = {
     // star-contract tables validate against their declared schema;
     // catalog-generic tables (quarantine, rollups, sketch tables)
-    // against their live one — the quarantine-correction runbook purges
-    // a media_quarantine row this way (StreamsSpec executes it)
+    // against their live one
     val schema = Schemas.schemaOfOpt(table)
       .getOrElse(this.table(table).schema)
     require(Seq(org.apache.spark.sql.types.IntegerType,

@@ -9,9 +9,8 @@ import graft.expressions.KmvMinima
   * — the consumer face of the sketch family: q163 builds both sides'
   * sketches in one grouped pass over a live corpus; this operator takes
   * sketches that already EXIST as tables (a [[graft.ledger.Catalog
-  * .maintainKmv]] rollup, a [[graft.streaming.Streams
-  * .maintainedKmvStream]] output, two time-traveled versions of the
-  * same rollup, two different tables' rollups) and answers the overlap
+  * .maintainKmv]] rollup, two time-traveled versions of the same
+  * rollup, two different tables' rollups) and answers the overlap
   * question WITHOUT touching either corpus: per key, distinct
   * estimates for each side, the union, the intersection, and the
   * Jaccard — all from two k-long arrays.

@@ -911,8 +911,7 @@ object Multimodal {
     })
   }
 
-  /** Per-media curation verdict (q162, and the row shape
-    * [[graft.streaming.Streams.mediaIngestStream]] quarantines on):
+  /** Per-media curation verdict (q162):
     * `ok` = the payload decoded AND agreed with its declared metadata;
     * `keep` = it passed the modality's quality gate. */
   final case class MediaVerdict(

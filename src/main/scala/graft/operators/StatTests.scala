@@ -99,9 +99,8 @@ object StatTests {
     * input produces the per-bin pair counts (map-side combined, ≤ bins
     * rows cross the wire), then a scalar fold over the bin table.
     */
-  /** The fixed-edge histogram bin of an integral metric — shared by
-    * the batch [[driftTV]] and the streaming bin counts
-    * ([[graft.streaming.Streams.runningDriftBins]]). Integral
+  /** The fixed-edge histogram bin of an integral metric, used by
+    * [[driftTV]]. Integral
     * floor-division binning (`div`): a float divide + cast would hit
     * the truncate-vs-round cast mismatch across engines. `valueCol`
     * must be an integral column (quantize upstream). */

@@ -34,7 +34,9 @@ object SurrogateKeys {
     * (e.g. from table-format footer counts — a metadata read, no job)
     * a few million rows through one task costs less than the
     * scheduling latency assignScalable pays to avoid it. Callers that
-    * cannot bound the input must use [[assignScalable]]. */
+    * cannot bound the input must use [[assignScalable]].
+    * `Warehouse.loadFato`'s small-batch write relies on the result being
+    * ONE partition (pinned in PlanSpec): change the window, check there. */
   def assignBounded(df: DataFrame, idCol: String, orderBy: Seq[String], offset: Long = 0L): DataFrame = {
     val w = Window.orderBy(orderBy.map(col): _*)
     df.withColumn(idCol, row_number().over(w).cast("long") + lit(offset))

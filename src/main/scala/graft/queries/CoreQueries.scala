@@ -281,8 +281,9 @@ object CoreQueries {
     // DuckDB replay of the complete pipeline (hash, dim surrogate
     // order, 5-way join).
     //
-    // Cost dissection (round-11 verdict #4; graft.Profile, sf0.1,
-    // local[32], steady state): staging 0.36 s/1 job; build 1 —
+    // Cost dissection (sf0.1, local[32], steady state, loaders run
+    // one by one; the traced perfbench warehouse-load run reports the
+    // same split as ledger.dim_s / ledger.fact_s): staging 0.36 s/1 job; build 1 —
     // dims 0.3–0.6 s/3–5 jobs each, fato 1.8 s/11 jobs (5 broadcast
     // builds + months collect + range-sample + write under AQE),
     // seq total 4.2 s/30 jobs; build 2 (the rerun) 4.8 s/37 jobs —

@@ -700,6 +700,18 @@ class CatalogSpec extends SparkSpec {
     assert(feed(2, 2) === Seq.empty)
   }
 
+  test("deleteWhere on a table with no declared schema validates against its live one") {
+    val dir = Files.createTempDirectory("cat_del_generic").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    cat.appendDelta("quarantine_q",
+      Seq((1L, "bad dims"), (2L, "bad header")).toDF("media_id", "reason"))
+    cat.appendDelta("quarantine_q", Seq((3L, "truncated")).toDF("media_id", "reason"))
+    assert(cat.deleteWhere("quarantine_q", "media_id", 1L, 1L) === 1L)
+    assert(cat.table("quarantine_q").select("media_id").as[Long].collect().sorted.toSeq
+      === Seq(2L, 3L))
+    intercept[IllegalArgumentException](cat.deleteWhere("quarantine_q", "reason", 0L, 1L))
+  }
+
   test("deleteWhere inside an aborted transaction is rolled back like any write") {
     val dir = Files.createTempDirectory("cat_del_txn").toString
     val cat = new Catalog(spark, s"$dir/wh")
@@ -761,6 +773,30 @@ class CatalogSpec extends SparkSpec {
     assert(sorted(cat.tableAt("rollup_kv", cat.versions("rollup_kv").min)) ===
       sorted(IncrementalAgg.partial(b1, Seq("k"), aggs)
         .select(schema0.fieldNames.map(org.apache.spark.sql.functions.col): _*)))
+  }
+
+  test("maintainAgg: a replayed batch id is skipped, not double-counted") {
+    import spark.implicits._
+    import graft.operators.IncrementalAgg.AggSpec
+    val dir = Files.createTempDirectory("rollup_replay").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val aggs = Seq(AggSpec("n", "count", "*"), AggSpec("s", "sum", "v"))
+    val b0 = Seq(("a", 1), ("b", 2)).toDF("k", "v")
+    cat.maintainAgg("rollup_r", b0, Seq("k"), aggs, batchId = Some(0L))
+    // the crash-between-commit-and-checkpoint shape: the SAME batch id
+    // is delivered again — the fold must be a no-op
+    cat.maintainAgg("rollup_r", b0, Seq("k"), aggs, batchId = Some(0L))
+    val after = cat.table("rollup_r").select("k", "n", "s")
+      .as[(String, Long, Long)].collect().sortBy(_._1)
+    assert(after.toSeq === Seq(("a", 1L, 1L), ("b", 1L, 2L)))
+    assert(cat.appliedBatchId("rollup_r") === Some(0L))
+    // the NEXT id folds normally
+    cat.maintainAgg("rollup_r", Seq(("a", 10)).toDF("k", "v"), Seq("k"),
+      aggs, batchId = Some(1L))
+    val next = cat.table("rollup_r").select("k", "n", "s")
+      .as[(String, Long, Long)].collect().sortBy(_._1)
+    assert(next.toSeq === Seq(("a", 2L, 11L), ("b", 1L, 2L)))
+    assert(cat.appliedBatchId("rollup_r") === Some(1L))
   }
 
   test("tags pin versions across writes, compaction, and vacuum") {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
+
 /** The Misra-Gries sketch aggregate + the exact two-pass heavy-hitter
   * operator built on it. The key properties: the VERIFIED result is
   * exact and partition-invariant (the raw sketch is only guaranteed to
@@ -58,5 +61,32 @@ class FrequentItemsSpec extends SparkSpec {
   test("empty input yields an empty result, not a failure") {
     val df = Seq.empty[String].toDF("v")
     assert(FrequentItems.exactHeavyHitters(df, "v", 0.1).count() === 0L)
+  }
+
+  test("misra_gries sketch aggregates incrementally in a streaming query") {
+    // the heavy-hitter sketch is mergeable by construction (partial
+    // buffers merge in any order), which is exactly the contract a
+    // streaming aggregation state update needs — candidates over the
+    // whole stream so far, in Complete mode, without keeping per-value
+    // state for the cold tail
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val mem = MemoryStream[String]
+    mem.addData(Seq.fill(30)("hot_a") ++ (0 until 10).map(i => s"cold_$i"): _*)
+    val q = mem.toDF().toDF("v")
+      .agg(graft.operators.FrequentItems.sketch(col("v"), 4).as("cand"))
+      .writeStream.format("memory").queryName("mg_stream")
+      .outputMode(OutputMode.Complete()).start()
+    try {
+      q.processAllAvailable()
+      // a second micro-batch makes hot_b heavy too — state must merge
+      mem.addData(Seq.fill(40)("hot_b") ++ (10 until 20).map(i => s"cold_$i"): _*)
+      q.processAllAvailable()
+      val cand = spark.table("mg_stream").head().getSeq[String](0).toSet
+      // n = 90, k = 4 → everything above 90/5 = 18 is guaranteed present
+      assert(Set("hot_a", "hot_b").subsetOf(cand), s"sketch lost a heavy hitter: $cand")
+      assert(cand.size <= 4)
+    } finally q.stop()
   }
 }

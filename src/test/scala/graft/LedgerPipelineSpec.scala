@@ -77,6 +77,38 @@ class LedgerPipelineSpec extends SparkSpec {
     assert(factFiles.contains("ano=2024"), s"no ano=2024 dir in $factFiles")
   }
 
+  test("mergeDim key-distinct contract: repeated dim values land once per natural key") {
+    // every dim value repeats across rows AND months; the loaders' source
+    // distinct is what keeps mergeDim's anti-join append key-distinct
+    val dir = Files.createTempDirectory("ledger_dimdistinct").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    val rows = for { tipo <- Seq("Despesa", "Receita"); m <- 1 to 3; i <- 1 to 4 }
+      yield s"$tipo $m-$i,$tipo,Moradia,Aluguel,Essencial,0$m/2024,$i"
+    val csv = writeCsv(dir, "rep.csv", rows)
+    val naturalKeys = Map(
+      "dim_tempo" -> Seq("ano", "mes"),
+      "dim_tipo" -> Seq("nome_tipo"),
+      "dim_grupo" -> Seq("id_tipo", "nome_grupo"),
+      "dim_categoria" -> Seq("id_grupo", "nome_categoria"),
+      "dim_classificacao" -> Seq("nome_classificacao"))
+    def assertKeyDistinct(when: String): Unit =
+      for ((t, keys) <- naturalKeys) {
+        val df = cat.table(t)
+        assert(df.count() === df.select(keys.map(col): _*).distinct().count(),
+          s"$t is not distinct on ${keys.mkString(", ")} $when")
+      }
+    Ingest.run(cat, csv)
+    val first = wh.run()
+    assert(first === Map("dim_tempo" -> 3L, "dim_tipo" -> 2L, "dim_grupo" -> 2L,
+      "dim_categoria" -> 2L, "dim_classificacao" -> 1L, "fato_lancamento" -> 24L))
+    assertKeyDistinct("after the first upload")
+    Ingest.run(cat, csv)
+    val second = wh.run()
+    assert(second.values.sum === 0L, s"second upload appended: $second")
+    assertKeyDistinct("after the re-upload")
+  }
+
   test("multi-upload with compactEvery: commits fold atomically, content identical") {
     // the recommended production setting (Warehouse scaladoc): a low
     // threshold here so the second upload crosses it inside the test

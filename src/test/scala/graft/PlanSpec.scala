@@ -128,6 +128,59 @@ class PlanSpec extends SparkSpec {
     assert(scan.count() === 4, "pruned scan must read exactly one month")
   }
 
+  test("small-batch fact write: ONE partition reaches appendDelta, no range repartition") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, WriteFilesExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.ledger.{Catalog, Ingest, Warehouse}
+    val dir = java.nio.file.Files.createTempDirectory("plan_smallfact").toString
+    val csv = java.nio.file.Paths.get(dir, "b.csv")
+    val rows = for { m <- 1 to 3; i <- 1 to 4 } yield
+      s"item $m-$i,Despesa,Casa,Conta$i,Fixo,0$m/2024,$i"
+    java.nio.file.Files.writeString(csv,
+      ("Descrição,Tipo,Grupo,Categoria,Classificação,Data,Valor" +: rows).mkString("\n"))
+    val cat = new Catalog(spark, s"$dir/wh")
+    Ingest.run(cat, csv.toString)
+    assert(cat.stats("staging_lancamentos").rows <= Warehouse.singleTaskWriteRows)
+    val factWrites = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    def factWrite(qe: QueryExecution) = qe.analyzed.collectFirst {
+      case c: InsertIntoHadoopFsRelationCommand
+        if c.outputPath.toString.contains(s"$dir/wh/fato_lancamento") => c
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (factWrite(qe).nonEmpty) factWrites.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(new Warehouse(cat).run()("fato_lancamento") === 12L)
+      // listener events arrive on the bus thread, after the action returns
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (factWrites.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(factWrites.size === 1, "expected exactly one fato_lancamento write")
+    val qe = factWrites.peek()
+    val written = factWrite(qe).get.query
+    assert(written.collectFirst { case r: RepartitionByExpression => r }.isEmpty,
+      s"small-batch fact write regrew a repartition:\n$written")
+    // AQE wraps the whole write: adaptive root → result stage → command
+    val plan = qe.executedPlan.collectFirst {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+    }.getOrElse(qe.executedPlan) match {
+      case stage: QueryStageExec => stage.plan
+      case p => p
+    }
+    val fed = plan.collect { case w: WriteFilesExec => w.child }
+    assert(fed.size === 1, s"no single WriteFiles in the fact write:\n$plan")
+    assert(fed.head.outputPartitioning.numPartitions === 1,
+      s"small-batch fact write is not single-partition:\n$plan")
+    assert(!plan.toString.contains("rangepartitioning"),
+      s"small-batch fact write range-shuffles:\n$plan")
+  }
+
   test("q87: the sketch is partial-aggregated; only k-sized buffers reach the merge") {
     val p = finalPlan("q87_heavy_hitters")
     assert(p.contains("partial_misra_gries"),

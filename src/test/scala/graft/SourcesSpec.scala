@@ -3,42 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructType, StructField, StringType, LongType}
-
-import graft.sources.{Jsonl, Orc}
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType)))
-
-  test("jsonl: declared-schema read preserves corrupt lines for audit") {
-    val dir = Files.createTempDirectory("jsonl").toString
-    Files.writeString(java.nio.file.Paths.get(s"$dir/d.jsonl"),
-      """{"doc_id": 1, "text": "hello"}
-        |not json at all
-        |{"doc_id": 2, "text": "world"}""".stripMargin)
-    // Spark disallows querying ONLY the corrupt column from raw json;
-    // cache the parsed batch first (what a rejects-audit job does anyway)
-    val df = Jsonl.read(spark, s"$dir/d.jsonl", docSchema).cache()
-    try {
-      assert(df.filter("_corrupt_record IS NULL").count() === 2)
-      assert(df.filter("_corrupt_record IS NOT NULL").count() === 1)
-    } finally df.unpersist()
-  }
-
-  test("jsonl → parquet conversion drops rejects and round-trips values") {
-    val dir = Files.createTempDirectory("jsonl2").toString
-    Files.writeString(java.nio.file.Paths.get(s"$dir/d.jsonl"),
-      """{"doc_id": 1, "text": "a"}
-        |garbage
-        |{"doc_id": 2, "text": "b"}""".stripMargin)
-    Jsonl.toParquet(spark, s"$dir/d.jsonl", docSchema, s"$dir/p")
-    val back = spark.read.parquet(s"$dir/p")
-      .orderBy("doc_id").as[(Long, String)].collect()
-    assert(back.toSeq === Seq((1L, "a"), (2L, "b")))
-  }
 
   test("orc: round-trips the documents table with schema intact") {
     import spark.implicits._
@@ -53,21 +20,6 @@ class SourcesSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") || plan.contains("pushedFilters"),
       s"no pushdown in:\n$plan")
-  }
-
-  test("Orc module: declared-schema read, partitioned write, parquet conversion") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("orc_mod").toString
-    val df = Seq((1L, "a", 2024), (2L, "b", 2024), (3L, "c", 2025))
-      .toDF("id", "v", "ano")
-    Orc.write(df, s"$dir/t", partitionBy = Seq("ano"))
-    // partition dirs exist (pruning layout)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/t/ano=2025")))
-    val back = Orc.read(spark, s"$dir/t", df.schema)
-    assert(back.count() === 3)
-    Orc.toParquet(spark, s"$dir/t", df.schema, s"$dir/p")
-    val p = spark.read.parquet(s"$dir/p").as[(Long, String, Int)].collect().sortBy(_._1)
-    assert(p.toSeq === Seq((1L, "a", 2024), (2L, "b", 2024), (3L, "c", 2025)))
   }
 
   test("csv sink/source: header round-trip with declared schema") {
