@@ -49,8 +49,10 @@ import graft.operators.{MergeIgnore, MergeUpsert}
   * Non-transactional writes to snapshot-scoped tables bump the snapshot
   * immediately after their table commit, keeping the pointer current.
   *
-  * Every table is also registered as a temp view so the full
-  * `spark.sql` surface works over the warehouse (SURVEY §3.3).
+  * Every write also registers the table as a temp view so the full
+  * `spark.sql` surface works over the warehouse (SURVEY §3.3). A
+  * transaction re-points the views of the scoped tables it wrote only
+  * after its snapshot flip, so a view never shows unpublished commits.
   *
   * Scale: dims stay tiny so their merge anti-joins broadcast; the fact
   * merge anti-joins on `id_hash` and its commits are partitioned by
@@ -353,8 +355,10 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** Run a multi-table load with warehouse-level atomicity: the body's
     * per-table commits stay invisible to other catalog instances until
     * the single snapshot flip after it returns. The writer itself reads
-    * its own in-progress writes (loaders are chained). Not reentrant;
-    * one transaction at a time per instance.
+    * its own in-progress writes, from any thread. Temp views of the
+    * scoped tables the body wrote are re-pointed after the flip; if the
+    * body throws they keep the published state. Not reentrant; one
+    * transaction at a time per instance.
     *
     * BEGIN semantics: the per-table head versions are recorded in an
     * INFLIGHT marker before the body runs; if a previous transaction
@@ -413,8 +417,12 @@ final class Catalog(val spark: SparkSession, val root: String,
       // crash between publish and this delete is benign: the next begin
       // rolls "back" to versions that equal the published heads (no-op)
       Files.deleteIfExists(inflight)
+      txnWritten.asScala.toSeq.sorted.foreach(register)
       out
-    } finally inTxnFlag.set(false)
+    } finally {
+      txnWritten.clear()
+      inTxnFlag.set(false)
+    }
   }
 
   /** Explicit crash recovery for a transaction started by ANOTHER
@@ -871,6 +879,18 @@ final class Catalog(val spark: SparkSession, val root: String,
   def register(table: String): Unit =
     this.table(table).createOrReplaceTempView(table)
 
+  /** Scoped tables written inside the running [[transaction]]; their
+    * temp views are re-pointed once, after the snapshot flip. */
+  private val txnWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Re-point `table`'s temp view after a write. Inside a transaction a
+    * scoped table's view waits for the snapshot flip: until then it keeps
+    * the published state, and it never points at commits an aborted
+    * body leaves behind. */
+  private def registerWrite(table: String): Unit =
+    if (inTxn && snapshotScoped(table)) txnWritten.add(table)
+    else register(table)
+
   def registerAll(): Unit = Schemas.tableNames.foreach(register)
 
   /** K1: full-replace write (staging semantics, reference app/app.py:79).
@@ -886,7 +906,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(dir)
     commit(table, Seq(dir), base)
-    register(table)
+    registerWrite(table)
   }
 
   /** Current max of an integral column, or 0 on empty/missing table —
@@ -1150,7 +1170,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       try out.write(id.toString.getBytes("UTF-8")) finally out.close()
     }
     commit(table, Seq(dir), base)
-    register(table)
+    registerWrite(table)
   }
 
   /** [[maintainAgg]]'s sibling for the KMV distinct-sketch family —
@@ -1226,7 +1246,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       try out.write(id.toString.getBytes("UTF-8")) finally out.close()
     }
     commit(table, Seq(dir), base)
-    register(table)
+    registerWrite(table)
   }
 
   /** The `k` a [[maintainKmv]] sketch table was built with, read from
@@ -1318,7 +1338,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     val n = footerRowCount(dir)
     if (n > 0) commit(table, baseDirs :+ dir, base)
     else deleteRecursively(Paths.get(dir))
-    register(table)
+    registerWrite(table)
     if (n > 0 && compactEvery > 0 && baseDirs.size + 1 >= compactEvery)
       compact(table, partitionBy, clusterBy)
     n
@@ -1436,7 +1456,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       commit(table, kept, base)
       deleteRecursively(Paths.get(dir))
     }
-    register(table)
+    registerWrite(table)
     before - after
   }
 
@@ -1501,7 +1521,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     val w = clustered.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
     commit(table, Seq(dir), base)
-    register(table)
+    registerWrite(table)
   }
 
   /** Table statistics from parquet footers only (ANALYZE-lite): exact
@@ -1562,7 +1582,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
     val smallSet = small.toSet
     commit(table, live.filterNot(smallSet) :+ dir, base)
-    register(table)
+    registerWrite(table)
     small.size
   }
 

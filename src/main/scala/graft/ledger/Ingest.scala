@@ -8,7 +8,7 @@ import graft.functions.LedgerFunctions._
 
 /** Entry point 1 (SURVEY §3.1): CSV → validate → hash → normalize →
   * staging overwrite. One lazy DataFrame chain; the reference's eager
-  * pandas steps (reference app/app.py:17-79) become two cheap actions
+  * pandas steps (reference app/app.py:17-79) become one cheap action
   * (the null audit) and one write job.
   */
 object Ingest {
@@ -69,6 +69,7 @@ object Ingest {
         normalized.na.drop(Schemas.requiredColumns)
       }
     catalog.replace("staging_lancamentos", toStaging(clean))
-    catalog.table("staging_lancamentos").count()
+    // exact, from the staging commit's parquet footers: no count job
+    catalog.stats("staging_lancamentos").rows
   }
 }

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * The un-partitioned window funnels through one task, which is correct
   * and cheap for dimension tables (at most ~millions of distinct values
-  * even at 100 TB fact scale). For fact-scale id assignment use
+  * even at 100 TB fact scale). [[graft.ledger.Warehouse]] numbers its new
+  * dim keys on the driver in exactly [[assign]]'s order (WarehouseSpec
+  * pins the parity). For fact-scale id assignment use
   * [[assignScalable]], which trades the single-task bottleneck for a
   * two-pass zipWithIndex-style per-partition offset scheme.
   */
@@ -35,8 +37,9 @@ object SurrogateKeys {
     * a few million rows through one task costs less than the
     * scheduling latency assignScalable pays to avoid it. Callers that
     * cannot bound the input must use [[assignScalable]].
-    * `Warehouse.loadFato`'s small-batch write relies on the result being
-    * ONE partition (pinned in PlanSpec): change the window, check there. */
+    * [[graft.ledger.Warehouse]]'s small-batch fact write relies on the
+    * result being ONE partition (PlanSpec "small-batch fact write" pins
+    * it): change the window, check there. */
   def assignBounded(df: DataFrame, idCol: String, orderBy: Seq[String], offset: Long = 0L): DataFrame = {
     val w = Window.orderBy(orderBy.map(col): _*)
     df.withColumn(idCol, row_number().over(w).cast("long") + lit(offset))

@@ -281,31 +281,25 @@ object CoreQueries {
     // DuckDB replay of the complete pipeline (hash, dim surrogate
     // order, 5-way join).
     //
-    // Cost dissection (sf0.1, local[32], steady state, loaders run
-    // one by one; the traced perfbench warehouse-load run reports the
-    // same split as ledger.dim_s / ledger.fact_s): staging 0.36 s/1 job; build 1 —
-    // dims 0.3–0.6 s/3–5 jobs each, fato 1.8 s/11 jobs (5 broadcast
-    // builds + months collect + range-sample + write under AQE),
-    // seq total 4.2 s/30 jobs; build 2 (the rerun) 4.8 s/37 jobs —
-    // every loader pays run-1's price PLUS the existing-side read,
-    // and appendDelta still executes the (empty) delta write because
-    // emptiness is only learned by running the anti-join. Catalog
-    // commit machinery is NOT the cost: manifest writes are
-    // driver-side file ops (µs–ms), footer counts read in parallel,
-    // and empty deltas skip the commit entirely. The ~7.5 s in-bench
-    // figure is ~67 AQE-stage jobs of fixed scheduling latency over a
-    // deliberately tiny batch, split across TWO complete warehouse
-    // builds — and the second build is the q68 contract itself (the
-    // K3 idempotency proof), so the cost is irreducible without
-    // deleting what the query exists to prove. At real batch sizes
-    // the fixed per-job latency amortizes to noise; nothing here
-    // scales super-linearly (PlanSpec pins the month-pruned
-    // existing-side scan).
+    // Cost: 24 Spark jobs per invocation at sf0.1, nearly all fixed
+    // scheduling latency over a deliberately tiny batch. Each build runs
+    // one staging aggregate for every dim's key set (plus one scan of
+    // the stored dims once they exist), one single-file write per dim
+    // that gains keys, and the fact load: three broadcast key→id
+    // relations, the id_hash dedup and id-window shuffle stages, the
+    // existing-hash side on a rerun, and the write. The rerun's fact
+    // delta is empty, but that is only learned by running the anti-join.
+    // The second build is the q68 contract itself (the K3 idempotency
+    // proof), so its jobs stay. Catalog commit machinery is driver-side
+    // file ops (µs–ms). Nothing here scales super-linearly (PlanSpec pins
+    // the month-pruned existing-side scan). The traced perfbench
+    // warehouse-load run reports the same split as ledger.dim_s /
+    // ledger.fact_s.
     "q68_warehouse_e2e" -> ((s, d) => {
-      // % 17 keeps the batch big enough to exercise every loader path
+      // % 17 keeps the batch big enough to exercise every load path
       // while holding the e2e's share of the bench artifact down (the
-      // build's ~100 jobs of fixed overhead dominate, but the star-join
-      // and hash work still scale with the batch). The 3-year date
+      // builds' fixed per-job overhead dominates, but the star-join and
+      // hash work still scale with the batch). The 3-year date
       // bound caps the batch's MONTH span (36 partitions): a batch
       // upload covers a bounded date range at the pipeline's documented
       // month-upload cadence, and each (ano, mes) directory the fact

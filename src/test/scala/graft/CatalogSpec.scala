@@ -129,6 +129,26 @@ class CatalogSpec extends SparkSpec {
     assert(reader.table("dim_grupo").count() === 2)
   }
 
+  test("transaction: temp views move at the snapshot flip, never to an aborted body's commits") {
+    val dir = Files.createTempDirectory("cat_txnview").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    def viewCount() = spark.sql("SELECT count(*) FROM dim_tipo").head().getLong(0)
+    cat.transaction { cat.appendDelta("dim_tipo", tipoDf("a", "b")) }
+    assert(viewCount() === 2)
+    var insideBody = -1L
+    intercept[RuntimeException](cat.transaction {
+      cat.appendDelta("dim_tipo", Seq((3, "c")).toDF("id_tipo", "nome_tipo"))
+      insideBody = viewCount()
+      sys.error("executor lost")
+    })
+    assert(insideBody === 2L, "the view exposed an unpublished commit")
+    assert(viewCount() === 2, "the view kept an aborted transaction's commit")
+    cat.transaction {
+      cat.appendDelta("dim_tipo", Seq((3, "c")).toDF("id_tipo", "nome_tipo"))
+    }
+    assert(viewCount() === 3, "a published transaction did not re-point the view")
+  }
+
   test("the FIRST transaction is atomic too: crash mid-load exposes nothing") {
     val dir = Files.createTempDirectory("cat_first").toString
     val writer = new Catalog(spark, s"$dir/wh")

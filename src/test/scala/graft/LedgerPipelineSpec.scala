@@ -78,8 +78,9 @@ class LedgerPipelineSpec extends SparkSpec {
   }
 
   test("mergeDim key-distinct contract: repeated dim values land once per natural key") {
-    // every dim value repeats across rows AND months; the loaders' source
-    // distinct is what keeps mergeDim's anti-join append key-distinct
+    // every dim value repeats across rows AND months; resolving each
+    // dim's batch keys as a SET is what keeps every dim append
+    // key-distinct
     val dir = Files.createTempDirectory("ledger_dimdistinct").toString
     val cat = new Catalog(spark, s"$dir/wh")
     val wh = new Warehouse(cat)
@@ -229,16 +230,19 @@ class LedgerPipelineSpec extends SparkSpec {
   test("strictQuirks: a crashed run does not double-append months on the healing rerun") {
     // the reference's pandas-append runs inside a Postgres transaction —
     // an aborted upload leaves NO month rows. Our transaction-begin
-    // rollback must give the same story: crash after loadDimTempo, and
-    // the healing rerun appends each month exactly once.
+    // rollback must give the same story: crash after the dim_tempo
+    // delta is committed, and the healing rerun appends each month
+    // exactly once.
     val dir = Files.createTempDirectory("ledger_strict_crash").toString
     val cat = new Catalog(spark, s"$dir/wh")
     val wh = new Warehouse(cat, strictQuirks = true)
     Ingest.run(cat, writeCsv(dir, "b.csv", batch1))
+    var tempoAppended = -1L
     intercept[RuntimeException](cat.transaction {
-      wh.loadDimTempo()
+      tempoAppended = wh.loadDim("dim_tempo", wh.resolve())
       sys.error("executor lost")
     })
+    assert(tempoAppended === 1L, "the aborted body committed no month")
     val counts = wh.run()
     assert(counts("dim_tempo") === 1 && counts("fato_lancamento") === 4)
     assert(cat.table("dim_tempo").count() === 1,
